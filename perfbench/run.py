@@ -14,8 +14,9 @@ metrics are the end-to-end ones; with ``--trace 1`` they are the
 per-layer ones, taken from spans around each call into a layer (see
 ``spans.py``). The line before it is a readable summary.
 
-Parallelism and driver memory come from ``SPARK_GRAFT_CPUS`` (default:
-the cores this process may use) and ``SPARK_DRIVER_MEM`` (default 3g).
+The run keeps to the workload's ``SLOT_SHARE`` of the cores this process
+may use. Parallelism and driver memory come from ``SPARK_GRAFT_CPUS``
+(default: all of those cores) and ``SPARK_DRIVER_MEM`` (default 3g).
 """
 
 from __future__ import annotations
@@ -133,11 +134,14 @@ def reclaim(spark) -> None:
 
 def measure(wl, tracer, seconds: float, per_op_reclaim: bool, min_ops: int = 1):
     """Run operations back to back for ``seconds``, and at least
-    ``min_ops``. Returns one record per operation: its seconds, items,
-    payload (None if it raised), error text and root span."""
+    ``min_ops``, ending on a whole block of ``wl.BLOCK`` operations so
+    every block holds the workload's full mix. Returns one record per
+    operation: its seconds, items, payload (None if it raised), error
+    text and root span."""
     ops = []
     start = time.perf_counter()
-    while len(ops) < min_ops or time.perf_counter() - start < seconds:
+    while (len(ops) < min_ops or time.perf_counter() - start < seconds
+           or len(ops) % wl.BLOCK):
         if per_op_reclaim:
             reclaim(wl.spark)
         t0 = time.perf_counter()
@@ -152,13 +156,17 @@ def measure(wl, tracer, seconds: float, per_op_reclaim: bool, min_ops: int = 1):
     return ops
 
 
-def end_to_end(ops, setup_s: float) -> dict:
+def end_to_end(ops, setup_s: float, block: int) -> dict:
+    """Throughput is that of the median block of operations, so one
+    slow stretch of a shared host does not move it; latency is the
+    median operation's."""
     ok = [o for o in ops if o["error"] is None] or ops
-    lat = [o["s"] * 1000.0 for o in ok]
+    blocks = [ok[i:i + block] for i in range(0, len(ok), block)]
     return {
         "setup_s": (setup_s, "s"),
-        "items_per_s": (sum(o["items"] for o in ok) / sum(o["s"] for o in ok), "1/s"),
-        "op_ms_p50": (statistics.median(lat), "ms"),
+        "items_per_s": (statistics.median(
+            sum(o["items"] for o in b) / sum(o["s"] for o in b) for b in blocks), "1/s"),
+        "op_ms_p50": (statistics.median(o["s"] * 1000.0 for o in ok), "ms"),
     }
 
 
@@ -178,7 +186,6 @@ def main(argv=None) -> int:
     # find it when the checkout root is on their PYTHONPATH
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [x for x in os.environ.get("PYTHONPATH", "").split(os.pathsep) if x])
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # get_spark's own default (48g) is more than a small machine has
     os.environ.setdefault("SPARK_DRIVER_MEM", "3g")
 
@@ -190,6 +197,12 @@ def main(argv=None) -> int:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
+    # the run, JVM and Python workers included, keeps to the workload's
+    # share of the cores; local[n] defaults to all of them
+    cores = sorted(os.sched_getaffinity(0))
+    n = max(1, int(len(cores) * WORKLOADS[args.workload].SLOT_SHARE))
+    os.sched_setaffinity(0, cores[:n])
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(n))
 
     base = os.path.join(ROOT, ".perfbench_work")
     work = os.path.join(base, f"{args.workload}-{args.seed}-{os.getpid()}")
@@ -203,9 +216,9 @@ def main(argv=None) -> int:
         wl = WORKLOADS[args.workload](spark, work, args.seed)
         off = Tracer(False, run_id)
         # generating inputs is repeated and its median taken; the warm
-        # pass runs once, because a cold filter_pipeline operation costs
-        # about two warm ones (JIT and code generation) and the run's
-        # time budget has room for one
+        # pass runs once (its length is the workload's WARM_OPS), because
+        # a cold filter_pipeline operation costs about two warm ones (JIT
+        # and code generation) and the run's time budget has room for one
         gens = []
         for _ in range(SETUP_REPEATS):
             shutil.rmtree(os.path.join(work, "in"), ignore_errors=True)
@@ -245,7 +258,7 @@ def main(argv=None) -> int:
             os.makedirs(os.path.join(base, "traces"), exist_ok=True)
             tracer.write(os.path.join(base, "traces", f"{run_id}.json"))
         else:
-            metrics = end_to_end(ops, setup_s)
+            metrics = end_to_end(ops, setup_s, wl.BLOCK)
     finally:
         if spark is not None:
             stop_spark(spark)

@@ -1,5 +1,6 @@
 """Tests of the benchmark's own pieces: the generator, the correctness
-checks and the span arithmetic. No Spark session is started.
+checks, the span arithmetic and how a run is measured. No Spark
+session is started.
 
     python3 -m pytest perfbench -q
 """
@@ -15,6 +16,7 @@ import pytest
 
 import checks
 import gen
+import run
 from spans import Span, self_times
 
 
@@ -206,3 +208,37 @@ def test_self_time_subtracts_the_children_union():
 
 def test_self_time_of_a_leaf_is_its_duration():
     assert self_times([Span(1, "x", None, "r", 2.0, 2.5)]) == {1: pytest.approx(0.5)}
+
+
+# ------------------------------------------------------------ measuring
+
+
+class _Fake:
+    """A workload whose operations take no time."""
+
+    name = "fake"
+    BLOCK = 10
+
+    def op(self, tracer):
+        return 1, None
+
+
+def test_measure_ends_on_a_whole_block():
+    from spans import Tracer
+
+    ops = run.measure(_Fake(), Tracer(False, "r"), 0, per_op_reclaim=False, min_ops=3)
+    assert len(ops) == 10
+    assert all(o["error"] is None for o in ops)
+
+
+def test_throughput_is_that_of_the_median_block():
+    def block(s):
+        return [{"s": s, "items": 1, "error": None}] * 2
+
+    # per-operation seconds 0.1, 0.2 and 1.0: the slow block moves the
+    # mean rate but not the median block's
+    ops = block(0.1) + block(0.2) + block(1.0)
+    m = run.end_to_end(ops, setup_s=3.0, block=2)
+    assert m["items_per_s"] == (pytest.approx(5.0), "1/s")
+    assert m["op_ms_p50"] == (pytest.approx(200.0), "ms")
+    assert m["setup_s"] == (3.0, "s")

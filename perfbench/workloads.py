@@ -224,8 +224,21 @@ class CatalogLookup:
     is sent when the last one returns."""
 
     name = "catalog_lookup"
-    # one block of the request mix, so every request kind is warm
-    WARM_OPS = 10
+    # every block of ten requests holds the whole mix (gen.make_catalog)
+    BLOCK = 10
+    # lookups keep getting faster over the first ~50-80 requests while
+    # the JVM compiles Spark's hot paths (in one 4-core run its compile
+    # rate fell sixfold over the first 80); warm four blocks so the timed
+    # window starts near the end of that slope instead of on it
+    WARM_OPS = 40
+    # share of the cores the run keeps to: a lookup service on part of a
+    # machine. On all of them, one client's tiny tasks contend with the
+    # query-planning thread and the JIT compiler threads, which keep
+    # compiling each request's fresh generated code, and a busy shared
+    # host slows lookups about twice as much as it slows batch work. On
+    # 4 cores, half the cores served lookups faster in 5 of 5 alternating
+    # pairs of runs, with less spread between runs
+    SLOT_SHARE = 0.5
     # a service does not clear its caches between requests
     RECLAIM_BETWEEN_OPS = False
     N_STARS = 200_000
@@ -329,7 +342,9 @@ class FilterPipeline:
     plus survey stars searched."""
 
     name = "filter_pipeline"
+    BLOCK = 1
     WARM_OPS = 1
+    SLOT_SHARE = 1.0
     RECLAIM_BETWEEN_OPS = True
 
     def __init__(self, spark, work: str, seed: int):
